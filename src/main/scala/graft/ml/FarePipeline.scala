@@ -1,16 +1,15 @@
 package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
-import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{OneHotEncoder, OneHotEncoderModel, StandardScaler, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor, RandomForestRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, concat_ws, conv, lit, md5, pmod, substring}
+import org.apache.spark.sql.functions.{abs, avg, col, concat_ws, conv, count, lit, md5, pmod, substring, var_pop, when}
 
 /** The reference's 5-stage fare-prediction pipeline (sparkML.py:70-171),
   * 1:1 in native Scala Spark ML — StringIndexer → OneHotEncoder →
-  * VectorAssembler → StandardScaler → regressor — plus the three
-  * RegressionEvaluators and feature importances.
+  * VectorAssembler → StandardScaler → regressor — plus the reference's
+  * three regression metrics and feature importances.
   *
   * Parameter parity (persisted metadata under savedModels/stages/):
   * handleInvalid="keep" on both the indexer and assembler, default
@@ -40,6 +39,11 @@ final case class FareConfig(
     modelKind: String = "rf") {
   def categoricalCols: Seq[String] = categoricalCol +: extraCategoricalCols
 }
+
+/** RMSE, MAE and R² over the rows whose label is non-null, and the count
+  * of ALL rows (labeled or not). */
+final case class RegressionStats(rmse: Double, mae: Double, r2: Double,
+                                 rows: Long)
 
 final case class FareMetrics(
     trainRmse: Double, trainMae: Double, trainR2: Double,
@@ -88,11 +92,22 @@ object FarePipeline {
     new Pipeline().setStages((indexers :+ encoder :+ assembler :+ scaler :+ model).toArray)
   }
 
-  private def evaluate(pred: DataFrame, label: String, metric: String): Double =
-    new RegressionEvaluator()
-      .setLabelCol(label).setPredictionCol("prediction")
-      .setMetricName(metric)
-      .evaluate(pred)
+  /** The reference's three RegressionEvaluator metrics (rmse, mae, r2)
+    * plus the row count, in ONE aggregate over a scored frame instead of
+    * one job per metric. Same definitions as Spark's RegressionMetrics:
+    * R² = 1 − SSerr/SStot with SStot = var_pop(label)·n, so the n cancels
+    * and R² = 1 − mean(e²)/var_pop(label); var_pop is Spark's stable
+    * central-moment aggregate, not a naive Σy² − (Σy)²/n. Rows with a
+    * null label are not judged but are counted in `rows`; with no
+    * labeled row every metric is NaN. */
+  def regressionMetrics(df: DataFrame, labelCol: String): RegressionStats = {
+    val y = col(labelCol).cast("double")
+    val e = y - col("prediction")
+    val r = df.agg(avg(e * e), avg(abs(e)), var_pop(when(e.isNotNull, y)),
+      count(lit(1))).head()
+    def d(i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+    RegressionStats(math.sqrt(d(0)), d(1), 1 - d(0) / d(2), r.getLong(3))
+  }
 
   /** Feature names aligned with the assembled vector: numeric columns,
     * then each categorical's one-hot slots (categorySizes from the fitted
@@ -111,10 +126,6 @@ object FarePipeline {
   def fitEval(df: DataFrame, cfg: FareConfig): (PipelineModel, FareMetrics) = {
     val Array(train, test) = df.randomSplit(Array(0.8, 0.2), cfg.seed)
     val model = build(cfg).fit(train)
-    // persist predictions: three evaluators per split would otherwise
-    // re-run split + full model scoring six times instead of twice
-    val pTrain = model.transform(train).persist()
-    val pTest = model.transform(test).persist()
     val importances = model.stages.last match {
       case m: RandomForestRegressionModel => m.featureImportances.toArray.toSeq
       case m: GBTRegressionModel => m.featureImportances.toArray.toSeq
@@ -126,16 +137,10 @@ object FarePipeline {
     require(importances.isEmpty || names.size == importances.size,
       s"feature name count ${names.size} != importance vector ${importances.size}")
     val imps = names.zip(importances).sortBy(-_._2)
-    val metrics = FareMetrics(
-      evaluate(pTrain, cfg.labelCol, "rmse"),
-      evaluate(pTrain, cfg.labelCol, "mae"),
-      evaluate(pTrain, cfg.labelCol, "r2"),
-      evaluate(pTest, cfg.labelCol, "rmse"),
-      evaluate(pTest, cfg.labelCol, "mae"),
-      evaluate(pTest, cfg.labelCol, "r2"),
-      imps)
-    pTrain.unpersist(); pTest.unpersist()
-    (model, metrics)
+    // one scoring pass per split: all three metrics come from one aggregate
+    val tr = regressionMetrics(model.transform(train), cfg.labelCol)
+    val te = regressionMetrics(model.transform(test), cfg.labelCol)
+    (model, FareMetrics(tr.rmse, tr.mae, tr.r2, te.rmse, te.mae, te.r2, imps))
   }
 
   final case class CvMetrics(foldRmse: Seq[Double], meanRmse: Double,
@@ -160,8 +165,8 @@ object FarePipeline {
       .localCheckpoint() // assignment materializes once for all k fits
     val rmses = (0 until folds).map { f =>
       val model = build(cfg).fit(withFold.filter(col("__fold") =!= f))
-      evaluate(model.transform(withFold.filter(col("__fold") === f)),
-        cfg.labelCol, "rmse")
+      regressionMetrics(model.transform(withFold.filter(col("__fold") === f)),
+        cfg.labelCol).rmse
     }
     val mean = rmses.sum / folds
     val sd = math.sqrt(rmses.map(r => (r - mean) * (r - mean)).sum / (folds - 1))

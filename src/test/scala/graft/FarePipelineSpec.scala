@@ -174,6 +174,80 @@ class FarePipelineSpec extends SparkSpec {
       s"served-batch metrics line must carry the batch RMSE: ${row.toSeq}")
   }
 
+  test("one-pass regressionMetrics agrees with RegressionEvaluator; null labels are counted, not judged") {
+    val withNull = trips.union(
+      trips.limit(1).withColumn("fare_amount", lit(null).cast("double")))
+    val scored = model.transform(withNull).cache()
+    val m = FarePipeline.regressionMetrics(scored, "fare_amount")
+    val labeled = scored.filter($"fare_amount".isNotNull)
+    def evaluator(metric: String) =
+      new org.apache.spark.ml.evaluation.RegressionEvaluator()
+        .setLabelCol("fare_amount").setMetricName(metric).evaluate(labeled)
+    for ((name, got) <- Seq("rmse" -> m.rmse, "mae" -> m.mae, "r2" -> m.r2)) {
+      val want = evaluator(name)
+      assert(math.abs(got - want) <= 1e-9 * math.abs(want), s"$name: $got vs $want")
+    }
+    assert(m.rows == 2001)
+    // an upload with no labeled rows: NaN metrics, no exception
+    val none = FarePipeline.regressionMetrics(
+      scored.filter($"fare_amount".isNull), "fare_amount")
+    assert(none.rmse.isNaN && none.mae.isNaN && none.r2.isNaN && none.rows == 1)
+    scored.unpersist()
+  }
+
+  test("Serve loads a saved model once per saved version and picks up a re-save") {
+    val base = java.nio.file.Files.createTempDirectory("serve_reuse").toString
+    val modelDir = s"$base/model"
+    model.write.overwrite().save(modelDir)
+    val csvDir = s"$base/upload"
+    trips.limit(40).write.option("header", "true").csv(csvDir)
+    def predictions(out: String) =
+      spark.read.parquet(s"$out/scored").select($"prediction").as[Double].collect().sorted.toSeq
+
+    assert(graft.tools.Serve.serve(spark, modelDir, csvDir, s"$base/out1") == 40)
+    val first = graft.tools.Serve.savedModel(spark, modelDir)
+    assert(graft.tools.Serve.serve(spark, modelDir, csvDir, s"$base/out2") == 40)
+    assert(graft.tools.Serve.savedModel(spark, modelDir) eq first,
+      "an unchanged model directory must not be loaded again")
+
+    // a different model re-saved into the same directory is served next
+    val other = FarePipeline.build(cfg.copy(numTrees = 3, maxDepth = 3)).fit(trips)
+    other.write.overwrite().save(modelDir)
+    assert(graft.tools.Serve.serve(spark, modelDir, csvDir, s"$base/out3") == 40)
+    assert(!(graft.tools.Serve.savedModel(spark, modelDir) eq first))
+    val want = other.transform(trips.limit(40)).select($"prediction")
+      .as[Double].collect().sorted.toSeq
+    assert(predictions(s"$base/out3") == want)
+    assert(predictions(s"$base/out1") != want)
+
+    // a deleted model directory fails the request, not a stale score
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(modelDir))
+    intercept[java.io.FileNotFoundException] {
+      graft.tools.Serve.serve(spark, modelDir, csvDir, s"$base/out4")
+    }
+  }
+
+  test("Serve: two concurrent requests on one model both score every row") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val base = java.nio.file.Files.createTempDirectory("serve_concurrent").toString
+    val modelDir = s"$base/model"
+    model.write.overwrite().save(modelDir)
+    val sizes = Seq(30, 50)
+    sizes.foreach(n => trips.limit(n).write.option("header", "true").csv(s"$base/upload$n"))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val served = sizes.map { n =>
+      Future {
+        start.await()
+        graft.tools.Serve.serve(spark, modelDir, s"$base/upload$n", s"$base/out$n")
+      }
+    }
+    start.countDown()
+    assert(Await.result(Future.sequence(served), 5.minutes) == sizes.map(_.toLong))
+    sizes.foreach(n => assert(spark.read.parquet(s"$base/out$n/scored").count() == n))
+  }
+
   test("model save/load round-trips (K5)") {
     val dir = Files.createTempDirectory("fare_model").toString + "/model"
     model.write.overwrite().save(dir)
