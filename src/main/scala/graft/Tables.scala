@@ -28,8 +28,8 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[(String, String),
       org.apache.spark.sql.types.StructType]()
 
-  /** Sessions must set `spark.sql.legacy.parquet.nanosAsLong=true`:
-    * events.ts is parquet TIMESTAMP(NANOS), which Spark has no native type
+  /** Sessions must set `spark.sql.legacy.parquet.nanosAsLong=true`
+    * ([[GraftSession.local]] does): events.ts is parquet TIMESTAMP(NANOS), which Spark has no native type
     * for. With the flag the column arrives as nanos-since-epoch LongType
     * and is truncated here to a microsecond TimestampType — the same
     * truncation Spark applies everywhere else, and what DuckDB's µs

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * the engine's custom Catalyst pieces into any session:
   *
   *   spark-submit --conf spark.sql.extensions=graft.expressions.GraftExtensions
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
+  *   // in-process: graft.GraftSession.local() sets the same conf
   *
   * Injects the codegen'd `cosine_similarity` scalar and the
   * [[RewriteSizeOfArrayIntersect]] optimizer rule (the Rule tier:

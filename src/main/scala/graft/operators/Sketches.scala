@@ -25,12 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** First 60 bits of md5 as a non-negative long — the same portable
-    * construction as [[Relational.hashSample]] / [[Dedup]]; DuckDB mirror
-    * is `CAST('0x' || substr(md5(x),1,15) AS BIGINT)`. */
-  private def md5Long(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   // ------------------------------------------------------------- Bloom
 
   /** Build a Bloom filter over `key`: `kHashes` md5-derived probe

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Dedup}
 
@@ -504,24 +504,10 @@ object CurationE2E {
     // rank-exact sampling (one count agg + broadcast targets + the
     // per-source rank window); the temperature REBALANCE itself is
     // exercised and oracled on q284's skewed mixture.
-    // optional UP-SAMPLING mode (round-17): SPARK_GRAFT_MIX_UPSAMPLE=1
-    // swaps the kept-rows face for the epoch-replicated one
-    // (Curation.sourceMixKeepEpochs, q286) — the training multiset a
-    // low-resource source's n_epochs > 1 actually expands to, flowing
-    // into the shard layout as real rows (same doc_id per epoch copy:
-    // md5 shard assignment co-locates a doc's epochs, and identical
-    // rows tie harmlessly in the order checksum). Default OFF so the
-    // committed artifact's legs stay comparable round-over-round.
-    val mixUpsample = sys.env.get("SPARK_GRAFT_MIX_UPSAMPLE").contains("1")
-    val mixedTrain = timed(if (mixUpsample) "mix_epochs" else "mix") {
+    val mixedTrain = timed("mix") {
       val train = assignedOut.filter($"split" === "train")
-      val df = mat(
-        if (mixUpsample)
-          Curation.sourceMixKeepEpochs(train, "doc_id", "source",
-            fracNum = 4, fracDen = 5, weighting = "sqrt")
-        else
-          Curation.sourceMixKeep(train, "doc_id", "source",
-            fracNum = 4, fracDen = 5, weighting = "sqrt"))
+      val df = mat(Curation.sourceMixKeep(train, "doc_id", "source",
+        fracNum = 4, fracDen = 5, weighting = "sqrt"))
       val (nd, nt) = census(df)
       (df, nd, nt)
     }
@@ -557,16 +543,9 @@ object CurationE2E {
         require(a.matches("x\\d+"), s"expected xN (e.g. x10), got $a")
         a.drop(1).toInt
       }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = GraftSession.sfDir
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local()
     import spark.implicits._
 
     // Untimed warmup (the Bench/E2E discipline): absorb Hadoop FS init

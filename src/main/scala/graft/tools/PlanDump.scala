@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Batch `.explain("formatted")` capture for the optimization-round plan
   * record: `sbt "runMain graft.tools.PlanDump <outDir> <suffix> <q>..."`
@@ -16,18 +15,8 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val txt =

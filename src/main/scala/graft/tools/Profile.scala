@@ -3,33 +3,24 @@ package graft.tools
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Stage-level profile of named queries (optimization-round tooling,
-  * guide §1 "measure first"): one warm pass (absorbs codegen/JIT), then
-  * a profiled pass per query with a listener recording every stage's
-  * wall span, task count and summed executor task time. Output per
-  * query: total wall, job count, and the stages sorted by wall span —
-  * the direct read for "single-task stage" (numTasks=1 where cores=32)
-  * and "job-count bound" (many jobs, each stage cheap) diagnoses.
-  * `sbt "runMain graft.tools.Profile <q>..."`. Dev tool only: never in
-  * a query path, never in the bench methodology. */
+  * "measure first"): per query, two warm passes (the first pays Janino
+  * codegen, the second settles JIT), then a profiled pass with a listener
+  * recording every stage's wall span, task count and summed executor task
+  * time. Output per query: total wall, job count, and the stages sorted
+  * by wall span — the direct read for "single-task stage" (numTasks=1
+  * where cores=32) and "job-count bound" (many jobs, each stage cheap)
+  * diagnoses. Every argument is a query name; the testdata directory
+  * comes from `SPARK_GRAFT_SF_DIR`:
+  * `SPARK_GRAFT_SF_DIR=<dir> sbt "runMain graft.tools.Profile <q>..."`.
+  * Dev tool only: never in a query path, never in the bench methodology. */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local()
 
     case class St(id: Int, name: String, tasks: Int, wallMs: Long,
                   taskMs: Long, site: String)

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 
 /** Scale-stress harness: replicates the sf0.1 fixtures 10× (6M-row
   * lineitem, 1.5M orders, 50k docs) into a multi-file layout under /tmp,
@@ -343,20 +343,11 @@ object ScaleStress {
       s"unknown group '$g' (know: ${Groups.keys.mkString(", ")})"))
     val groupMode = groupName.isDefined
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.local(cpus = 32, overrides = Map(
       // default 128MB splits would bin the ~8MB replica files into 2-3
       // scan tasks; 16MB mimics the per-task data share of a real cluster
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.files.maxPartitionBytes" -> "16m",
+      "spark.sql.files.openCostInBytes" -> "1m"))
     import spark.implicits._
 
     val dst = ensureReplica(spark, src, factor)

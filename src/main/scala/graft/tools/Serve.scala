@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
+import graft.GraftSession
 import graft.functions.TripFeatures
 import graft.ml.{FareConfig, FareMetrics, FarePipeline}
 
@@ -39,14 +40,7 @@ object Serve {
     require(args.length == 3,
       "usage: Serve <modelDir> <csvPath> <outDir>")
     val Array(modelDir, csvPath, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val n = serve(spark, modelDir, csvPath, outDir)
     println(s"SERVE scored $n rows -> $outDir/scored")
     spark.stop()
